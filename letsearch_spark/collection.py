@@ -132,14 +132,31 @@ class Collection:
         self.spark = spark
         self.root = root
         self.config = config
-        # per-column cached embeddings (the analog of the reference keeping
-        # its usearch index in RAM while serving, collection_actor.rs:143-152);
-        # invalidated on any write
-        self._emb_cache: dict[str, DataFrame] = {}
-        # driver-local serving bundles for strategy='local'
-        self._local_idx: dict[str, tuple] = {}
-        # columns whose embeddings-exist check passed; cleared on writes
-        self._embeddings_ok: set[str] = set()
+        # every piece of in-memory serving state, keyed (column or None,
+        # kind, *params) -- None marks collection-wide entries. The analog
+        # of the reference keeping its usearch index in RAM while serving
+        # (collection_actor.rs:143-152). Kinds:
+        #   (None, "docs")              live docs plan (file listing pinned)
+        #   (None, "tombstones")        tombstone-sidecar existence flag
+        #   (None, "tombstone_count")   deletion-backlog rows (join hint)
+        #   (None, "groups", group_col) distinct groups (maxsim auto tier)
+        #   (col, "embeddings_ok")      per-column embeddings probe passed
+        #   (col, "rows")               indexed rows (auto strategy policy)
+        #   (col, "serve")              cached float serve view
+        #   (col, "raw_serve")          uncached serve PLAN (memory tiers)
+        #   (col, "lsh")                bucket-sorted cached LSH view
+        #   (col, "lexical")            (postings, dfreq, n_docs, avgdl, vocab)
+        #   (col, "lex_idf_map")        term->df dict, None over the ceiling
+        #   (col, "local") / (col, "local_lex")  driver-RAM serving bundles
+        #   (col, "ivf")                IVF centroids
+        #   (col, "pq")                 (PQCodebook, cached coded view)
+        #   (col, "ivf_pq")             (centroids, PQCodebook)
+        #   (col, "hamming")            cached signature view
+        #   (col, "hamming_center")     signature threshold (per-dim mean)
+        #   (col, "maxsim_pool", group_col)  cached pooled-centroid view
+        # Filled by _memo_get / the index builders; emptied only by
+        # _invalidate_cache and _memo_drop.
+        self._memo: dict[tuple, object] = {}
         # driver-RAM ceiling for strategy='local' serving (rows); a
         # 100x-scale collection must use the distributed strategies
         self.local_serve_max_rows: int = 1_000_000
@@ -148,30 +165,6 @@ class Collection:
         # driver + executor footprint grows with N. Corpus-scale query
         # sets belong in operators/topk.knn_join over a query DataFrame.
         self.search_many_max_queries: int = 10_000
-        # centroids of built IVF indexes (strategy='ivf'); the presence
-        # of a key marks the on-disk index current -- cleared on writes
-        self._ivf_centroids: dict = {}
-        # per-column (PQCodebook, cached codes DataFrame) for
-        # strategy='pq'; cleared on writes
-        self._pq_index: dict = {}
-        # per-column (centroids, PQCodebook) for strategy='ivf_pq'
-        # (codes live on disk); cleared on writes
-        self._ivf_pq_index: dict = {}
-        # per-column cached sign-bit signature view (key, sig) for
-        # strategy='hamming' -- 1 bit/dim, ~32x smaller than the float
-        # serve view; cleared on writes
-        self._hamming_index: dict = {}
-        # per-column signature CENTER (the per-dim fixed-point mean the
-        # sign bits threshold at); loaded/derived by the refresh paths
-        self._hamming_centers: dict[str, list[float]] = {}
-        # per-(column, group_col) cached normalized pooled-centroid
-        # view for the grouped MaxSim prefilter (r10, VERDICT r9 #1):
-        # one slim row per group, backed by the maxsim_pool parquet
-        # sidecar; cleared on writes
-        self._maxsim_pool: dict = {}
-        # per-group_col distinct-group counts behind
-        # resolve_maxsim_prefilter's auto tier; cleared on writes
-        self._maxsim_group_counts: dict[str, int] = {}
         # candidate depth for the hamming exact-cosine rescore (recall
         # knob: rescore >= corpus rows degenerates to exact search)
         self.hamming_rescore: int = 100
@@ -187,19 +180,6 @@ class Collection:
         # -- single-vector docs, multi-vector queries still meaningful
         # via search_multi
         self.maxsim_group_col: str | None = None
-        # per-column BM25 corpus stats (n_docs, avgdl) for the cached
-        # lexical view (strategy='hybrid'); cleared on writes
-        self._lex_stats: dict[str, tuple[int, float]] = {}
-        # per-column driver-side term->df map (the idf-literal serving
-        # mode: the dict every search engine's serving node keeps in
-        # RAM), built LAZILY on the first per-query hybrid search --
-        # batch paths (search_many) never pay the collect. None =
-        # vocabulary exceeded the ceiling below; per-query hybrid then
-        # computes df in-plan instead. Cleared on writes.
-        self._lex_dfmap: dict[str, dict[str, int] | None] = {}
-        # vocabulary sizes observed at lexical-view build (gates the
-        # lazy collect above)
-        self._lex_vocab: dict[str, int] = {}
         # vocabulary ceiling for collecting the dfreq table driver-side
         # (a str->int dict costs ~100-150 MB of driver RAM per million
         # terms; a 100 TB web corpus with a billion-term vocabulary
@@ -214,15 +194,6 @@ class Collection:
         # partition-pruned) is the shape that still serves
         self.auto_exact_max_rows: int = 200_000
         self.auto_cached_max_rows: int = 5_000_000
-        # per-column serve-view row counts backing the auto policy;
-        # cleared on writes
-        self._col_rows: dict[str, int] = {}
-        # tri-state tombstone-existence probe cache (None = re-check the
-        # FS on next read); cleared on writes
-        self._tomb_flag: bool | None = None
-        # deletion-backlog row count backing the broadcast decision
-        # below; computed lazily, cleared on writes
-        self._tomb_count: int | None = None
         # anti-join hint ceiling: a tombstone set at or below this many
         # keys broadcasts (a ~8 B/key table, cheap everywhere); a larger
         # backlog falls back to a shuffled join -- force-broadcasting an
@@ -310,14 +281,13 @@ class Collection:
         ``_invalidate_cache``, which drops this along with the serve
         caches, so appended files (and new tombstones) are never
         missed."""
-        df = getattr(self, "_docs_df", None)
-        if df is None:
+
+        def build() -> DataFrame:
             df = self._docs_raw()
             tomb = self._tombstones_hinted()
-            if tomb is not None:
-                df = df.join(tomb, KEY_COL, "left_anti")
-            self._docs_df = df
-        return df
+            return df if tomb is None else df.join(tomb, KEY_COL, "left_anti")
+
+        return self._memo_get((None, "docs"), build)
 
     def _docs_raw(self) -> DataFrame:
         """The physical docs table INCLUDING tombstoned rows. Only for
@@ -330,11 +300,9 @@ class Collection:
         """(``_key``) DataFrame of deleted keys, or None when the
         collection has no pending deletions. The existence probe is one
         Hadoop FS call, cached until a write invalidates it."""
-        flag = self._tomb_flag
-        if flag is None:
-            flag = self._fs_nonempty(self.tombstones_path)
-            self._tomb_flag = flag
-        if not flag:
+        if not self._memo_get(
+            (None, "tombstones"), lambda: self._fs_nonempty(self.tombstones_path)
+        ):
             return None
         return self.spark.read.parquet(self.tombstones_path).select(KEY_COL)
 
@@ -346,10 +314,7 @@ class Collection:
         tomb = self._tombstones()
         if tomb is None:
             return None
-        n = self._tomb_count
-        if n is None:
-            n = tomb.count()
-            self._tomb_count = n
+        n = self._memo_get((None, "tombstone_count"), tomb.count)
         return self._size_hinted(tomb, n)
 
     def _size_hinted(self, keys: DataFrame, n: int) -> DataFrame:
@@ -1052,16 +1017,18 @@ class Collection:
         cleared on any write that invalidates caches) -- the Hadoop FS
         round-trip costs ~2 ms, which would dominate the driver-local
         serving path's per-query budget."""
-        if column in self._embeddings_ok:
-            return
-        part = os.path.join(self.embeddings_path, f"column_name={column}")
-        if not self._fs_nonempty(part):
-            raise RuntimeError(
-                f"collection {self.config.name!r} has no embeddings for "
-                f"column {column!r} yet; run embed_column({column!r}) "
-                f"(CLI: index/add-docs) first"
-            )
-        self._embeddings_ok.add(column)
+
+        def probe() -> bool:
+            part = os.path.join(self.embeddings_path, f"column_name={column}")
+            if not self._fs_nonempty(part):
+                raise RuntimeError(
+                    f"collection {self.config.name!r} has no embeddings for "
+                    f"column {column!r} yet; run embed_column({column!r}) "
+                    f"(CLI: index/add-docs) first"
+                )
+            return True
+
+        self._memo_get((column, "embeddings_ok"), probe)
 
     def embeddings(self, column: str | None = None) -> DataFrame:
         """LIVE embeddings (tombstoned keys anti-joined out, like
@@ -1159,103 +1126,45 @@ class Collection:
         self._invalidate_cache(column, drop_index_meta=not incremental)
         return self.embeddings(column).count()
 
-    def _invalidate_cache(
-        self, column: str | None = None, drop_index_meta: bool = True
-    ) -> None:
-        """Drop serve-path caches after a write. ``drop_index_meta``
-        additionally removes the on-disk ANN quantizer files, forcing a
-        full index rebuild on next use -- required when existing keys
-        may carry DIFFERENT data (full re-embed / re-import); pass
-        False for append-only writes so the refresh paths can top the
-        indexes up incrementally instead."""
-        # the cached docs plan pins the parquet file listing; any write
-        # (import, append, embed bookkeeping) must refresh it
-        self._docs_df = None
-        self._tomb_flag = None
-        self._tomb_count = None
-        cols = (
-            [
-                column,
-                f"__docs_{column}",
-                f"__serve_{column}",
-                f"__rawserve_{column}",
-                f"__lsh_{column}",
-                f"__lex_{column}",
-                f"__lexdf_{column}",
-            ]
-            if column
-            else list(self._emb_cache)
-        )
-        for c in cols:
-            df = self._emb_cache.pop(c, None)
-            if df is not None:
+    def _memo_get(self, key: tuple, build):
+        """The memo entry at ``key``, built by ``build()`` on a miss and
+        stored whatever it returns -- ``None`` and ``False`` included, so
+        a negative probe is not re-run per query. A ``build`` that raises
+        stores nothing."""
+        try:
+            return self._memo[key]
+        except KeyError:
+            value = self._memo[key] = build()
+            return value
+
+    def _memo_drop(self, key: tuple) -> None:
+        """Forget one memo entry, unpersisting every cached DataFrame it
+        holds (a bare frame or the members of a tuple entry)."""
+        value = self._memo.pop(key, None)
+        for df in value if isinstance(value, tuple) else (value,):
+            if isinstance(df, DataFrame) and df.is_cached:
                 try:
                     df.unpersist()
                 except Exception:
                     pass
-        if column is None:
-            self._local_idx.clear()
-            self._embeddings_ok.clear()
-            self._ivf_centroids.clear()
-            self._lex_stats.clear()
-            self._col_rows.clear()
-            for cb, coded in self._pq_index.values():
-                try:
-                    coded.unpersist()
-                except Exception:
-                    pass
-            self._pq_index.clear()
-            self._ivf_pq_index.clear()
-            for sig in self._hamming_index.values():
-                try:
-                    sig.unpersist()
-                except Exception:
-                    pass
-            self._hamming_index.clear()
-            self._hamming_centers.clear()
-            for pv in self._maxsim_pool.values():
-                try:
-                    pv.unpersist()
-                except Exception:
-                    pass
-            self._maxsim_pool.clear()
-            self._maxsim_group_counts.clear()
-            self._lex_dfmap.clear()
-            self._lex_vocab.clear()
-            if drop_index_meta:
-                for c in self.config.index_columns:
-                    self._drop_index_meta(c)
-        else:
-            self._local_idx.pop(column, None)
-            self._local_idx.pop(f"__lex_{column}", None)
-            self._embeddings_ok.discard(column)
-            self._ivf_centroids.pop(column, None)
-            self._col_rows.pop(column, None)
-            self._lex_stats.pop(column, None)
-            self._lex_dfmap.pop(column, None)
-            self._lex_vocab.pop(column, None)
-            pq = self._pq_index.pop(column, None)
-            if pq is not None:
-                try:
-                    pq[1].unpersist()
-                except Exception:
-                    pass
-            self._ivf_pq_index.pop(column, None)
-            sig = self._hamming_index.pop(column, None)
-            if sig is not None:
-                try:
-                    sig.unpersist()
-                except Exception:
-                    pass
-            self._hamming_centers.pop(column, None)
-            for k in [k for k in self._maxsim_pool if k[0] == column]:
-                pv = self._maxsim_pool.pop(k)
-                try:
-                    pv.unpersist()
-                except Exception:
-                    pass
-            if drop_index_meta:
-                self._drop_index_meta(column)
+
+    def _invalidate_cache(
+        self, column: str | None = None, drop_index_meta: bool = True
+    ) -> None:
+        """Drop in-memory serving state after a write: ``column``'s
+        entries plus every collection-wide one (the docs plan and the
+        tombstone probes pin the file listing), or the whole memo when
+        ``column`` is None. ``drop_index_meta`` additionally removes
+        the on-disk ANN quantizer files of the same column(s), forcing
+        a full index rebuild on next use -- required when existing keys
+        may carry DIFFERENT data (full re-embed / re-import); pass
+        False for append-only writes so the refresh paths can top the
+        indexes up incrementally instead."""
+        for key in [k for k in self._memo if column is None or k[0] in (column, None)]:
+            self._memo_drop(key)
+        if drop_index_meta:
+            for c in self.config.index_columns if column is None else [column]:
+                self._drop_index_meta(c)
 
     def embed_all(self, incremental: bool = True) -> dict[str, int]:
         return {
@@ -1269,11 +1178,9 @@ class Collection:
         """Indexed-row count for ``column`` (one partition-pruned count
         on first use, cached until a write invalidates it) -- the size
         signal the auto strategy policy reads."""
-        n = self._col_rows.get(column)
-        if n is None:
-            n = self.embeddings(column).count()
-            self._col_rows[column] = n
-        return n
+        return self._memo_get(
+            (column, "rows"), lambda: self.embeddings(column).count()
+        )
 
     def resolve_strategy(self, column: str) -> str:
         """The ``strategy='auto'`` policy: pick the serving shape from
@@ -1342,10 +1249,10 @@ class Collection:
         the docs table, cached until the next write."""
         if group_col is None:
             return None
-        n = self._maxsim_group_counts.get(group_col)
-        if n is None:
-            n = self.docs().select(group_col).distinct().count()
-            self._maxsim_group_counts[group_col] = n
+        n = self._memo_get(
+            (None, "groups", group_col),
+            lambda: self.docs().select(group_col).distinct().count(),
+        )
         if n < self.maxsim_auto_prefilter_min_groups:
             return None
         return self.maxsim_auto_prefilter_k
@@ -1571,6 +1478,15 @@ class Collection:
         emit only its local top-k per query, and the tiny hit set
         broadcasts back against the view for content.
 
+        A single query is served several times faster by
+        :meth:`search`: the batched plan's fixed per-call cost only
+        amortizes across many queries. On the perfbench ``serve`` hot
+        collection (seed 7: 4,000 docs, stub://16; local[4] on a
+        4-core host; 37 interleaved pairs after warm-up)
+        ``search_many(col, [q])`` took 899 / 1340 / 573 ms p50 against
+        ``search(col, q)``'s 312 / 298 / 70 ms for hamming / hybrid /
+        join (dense).
+
         strategy='hybrid' adds the batched BM25 leg (one pass over the
         cached postings for the union of all queries' terms) and fuses
         per query with distributed reciprocal-rank fusion
@@ -1664,9 +1580,7 @@ class Collection:
             # of any kind (the tier for corpora beyond the cache)
             from letsearch_spark.operators.pq import ivf_pq_knn_join
 
-            if column not in self._ivf_pq_index:
-                self.refresh_ivf_pq_index(column)
-            centroids, cb = self._ivf_pq_index[column]
+            centroids, cb = self._ivf_pq_meta(column)
             hits = ivf_pq_knn_join(
                 self.spark,
                 self.ivf_pq_path(column),
@@ -1718,7 +1632,7 @@ class Collection:
             # the next line reads
             q_rows = self._centered_query_rows(column, vecs)
             cand = hamming_knn_join(
-                self._hamming_index[column],
+                self._memo[(column, "hamming")],
                 q_rows,
                 rescore=max(self.hamming_rescore, limit),
                 key_col=KEY_COL,
@@ -1791,9 +1705,7 @@ class Collection:
             # _search_pq happens after ranking
             from letsearch_spark.operators.pq import pq_knn_join
 
-            if column not in self._pq_index:
-                self.build_pq_index(column)
-            cb, coded = self._pq_index[column]
+            cb, coded = self._pq_codes(column)
             hits = pq_knn_join(
                 coded,
                 cb,
@@ -2004,7 +1916,7 @@ class Collection:
             q_rows = self._centered_query_rows(column, qvecs)
             cand = (
                 hamming_knn_join(
-                    self._hamming_index[column],
+                    self._memo[(column, "hamming")],
                     q_rows,
                     rescore=prefilter_k,
                     key_col=KEY_COL,
@@ -2343,9 +2255,7 @@ class Collection:
         Returns (postings, dfreq, n_docs, avgdl)."""
         from letsearch_spark.operators.bm25 import build_postings
 
-        key = f"__lex_{column}"
-        view = self._emb_cache.get(key)
-        if view is None:
+        def build():
             # build from the SERVE view, not the raw docs table: the two
             # legs and the content fetch must rank the same population.
             # Postings over self.docs() would let appended-but-not-yet-
@@ -2382,15 +2292,11 @@ class Collection:
                 .collect()[0]
             )
             vocab = dfreq.count()  # materialize the vocabulary table now
-            self._lex_stats[column] = (int(row["n"]), float(row["avgdl"] or 0.0))
-            self._lex_vocab[column] = int(vocab)
-            self._emb_cache[key] = view
-            self._emb_cache[f"__lexdf_{column}"] = dfreq
-        return (
-            view,
-            self._emb_cache[f"__lexdf_{column}"],
-            *self._lex_stats[column],
-        )
+            return (
+                view, dfreq, int(row["n"]), float(row["avgdl"] or 0.0), int(vocab)
+            )
+
+        return self._memo_get((column, "lexical"), build)[:4]
 
     def _lex_idf_map(self, column: str) -> dict[str, int] | None:
         """Lazy driver-side term->df map for the idf-literal serving
@@ -2399,16 +2305,15 @@ class Collection:
         per-query hybrid search -- batch paths never pay it -- and only
         when the vocabulary fits under lexical_idf_cache_max_terms;
         otherwise None and the caller computes df in-plan."""
-        if column in self._lex_dfmap:
-            return self._lex_dfmap[column]
-        _view, dfreq, *_ = self._lexical_view(column)
-        if self._lex_vocab.get(column, 0) > self.lexical_idf_cache_max_terms:
-            self._lex_dfmap[column] = None
-        else:
-            self._lex_dfmap[column] = {
-                r["__term"]: int(r["__df"]) for r in dfreq.collect()
-            }
-        return self._lex_dfmap[column]
+
+        def build() -> dict[str, int] | None:
+            _view, dfreq, *_ = self._lexical_view(column)
+            vocab = self._memo[(column, "lexical")][4]
+            if vocab > self.lexical_idf_cache_max_terms:
+                return None
+            return {r["__term"]: int(r["__df"]) for r in dfreq.collect()}
+
+        return self._memo_get((column, "lex_idf_map"), build)
 
     def _search_hybrid(
         self, column: str, query: str, qvec, limit: int
@@ -2547,10 +2452,9 @@ class Collection:
         return sorted(rrf.items(), key=lambda kv: (-kv[1], kv[0]))[:limit]
 
     def _fetch_ordered(self, serve: DataFrame, ordered) -> DataFrame:
-        """Driver-side fetch-back shared by strategy='inlist' and
-        'hybrid': IN-list content fetch against the cached serve view +
-        reorder to the given (key, score) list, with the P6 null-content
-        drop."""
+        """Driver-side fetch-back for strategy='inlist': IN-list content
+        fetch against the cached serve view + reorder to the given (key,
+        score) list, with the P6 null-content drop."""
         if not ordered:
             return _rows_df(self.spark, [], _RESULT_SCHEMA)
         fetched = (
@@ -2627,7 +2531,7 @@ class Collection:
         # must not MATERIALIZE that cache (review r7: the hamming tier
         # exists precisely for corpora whose float view does not fit,
         # and its refresh routed through here)
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memo.get((column, "serve"))
         base = cached if cached is not None else self._raw_serve_frame(column)
         return base.where(F.col("content").isNotNull()).select(
             KEY_COL, "vector"
@@ -2727,7 +2631,7 @@ class Collection:
             os.path.join(self.ivf_path(column), "_centroids.npy"),
             buf.getvalue(),
         )
-        self._ivf_centroids[column] = centroids
+        self._memo[(column, "ivf")] = centroids
 
     def refresh_ivf_index(self, column: str) -> str:
         """Bring the on-disk IVF-Flat index up to date with the
@@ -2749,7 +2653,7 @@ class Collection:
         action, new = self._plan_index_refresh(column, path)
         cent = None
         if action in ("current", "append"):
-            cent = self._ivf_centroids.get(column)
+            cent = self._memo.get((column, "ivf"))
             if cent is None:
                 raw = self._fs_read_bytes(cpath)
                 if raw is not None:
@@ -2757,11 +2661,11 @@ class Collection:
             if cent is None:
                 action = "rebuild"  # index data without its quantizer
         if action == "current":
-            self._ivf_centroids[column] = cent
+            self._memo[(column, "ivf")] = cent
             return "current"
         if action == "append":
             append_ivf(new, path, cent)
-            self._ivf_centroids[column] = cent
+            self._memo[(column, "ivf")] = cent
             return "appended"
         self.build_ivf_index(column)
         return "built" if action == "missing" else "rebuilt"
@@ -2789,14 +2693,20 @@ class Collection:
             encode_pq(emb, cb).select(KEY_COL, "pq_code").cache()
         )
         coded.count()  # materialize so per-query cost is the ADC scan only
-        self._pq_index[column] = (cb, coded)
+        self._memo[(column, "pq")] = (cb, coded)
+
+    def _pq_codes(self, column: str):
+        """(codebook, cached coded view) for strategy='pq', built on
+        first use."""
+        key = (column, "pq")
+        if key not in self._memo:
+            self.build_pq_index(column)
+        return self._memo[key]
 
     def _search_pq(self, column: str, qvec, limit: int) -> DataFrame:
         from letsearch_spark.operators.pq import pq_topk
 
-        if column not in self._pq_index:
-            self.build_pq_index(column)
-        cb, coded = self._pq_index[column]
+        cb, coded = self._pq_codes(column)
         hits = pq_topk(coded, cb, qvec, k=limit, key_col=KEY_COL)
         return self._fetch_back_hits(hits, column, limit)
 
@@ -2815,23 +2725,21 @@ class Collection:
         search / rescore call (profiled at ~0.3-1.7 s of pure driver
         time under cProfile). ``_invalidate_cache`` drops the memo on
         every write, so new files and tombstones are never missed."""
-        key = f"__rawserve_{column}"
-        memo = self._emb_cache.get(key)
-        if memo is not None:
-            return memo
-        from letsearch_spark.functions.vector import l2_norm
 
-        emb = self.embeddings(column).select(KEY_COL, "vector")
-        if self.config.model_variant != "f32":
-            from letsearch_spark.functions.quantize import dequantize_column
+        def build() -> DataFrame:
+            from letsearch_spark.functions.vector import l2_norm
 
-            emb = dequantize_column(emb, "vector", self.config.model_variant)
-        docs = self.docs().select(F.col(KEY_COL), F.col(column).alias("content"))
-        frame = emb.withColumn("_vnorm", l2_norm("vector")).join(
-            docs, KEY_COL
-        )
-        self._emb_cache[key] = frame
-        return frame
+            emb = self.embeddings(column).select(KEY_COL, "vector")
+            if self.config.model_variant != "f32":
+                from letsearch_spark.functions.quantize import dequantize_column
+
+                emb = dequantize_column(emb, "vector", self.config.model_variant)
+            docs = self.docs().select(
+                F.col(KEY_COL), F.col(column).alias("content")
+            )
+            return emb.withColumn("_vnorm", l2_norm("vector")).join(docs, KEY_COL)
+
+        return self._memo_get((column, "raw_serve"), build)
 
     def hamming_path(self, column: str) -> str:
         return os.path.join(self.home, "hamming", f"column={column}")
@@ -2852,7 +2760,7 @@ class Collection:
         frozen as the ``_center.npy`` sidecar that both the stored
         signatures and every query read back -- internal consistency
         comes from the sidecar, not from the aggregation order."""
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memo.get((column, "serve"))
         base = cached if cached is not None else self._raw_serve_frame(column)
         rows = (
             base.where(F.col("content").isNotNull())
@@ -2882,7 +2790,7 @@ class Collection:
         cached it): the point of the signature tier is serving a
         collection whose float view does NOT fit in cluster memory, so
         building signatures must not materialize that float cache."""
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memo.get((column, "serve"))
         base = cached if cached is not None else self._raw_serve_frame(column)
         emb = base.where(F.col("content").isNotNull())
         return emb.select(
@@ -2900,9 +2808,9 @@ class Collection:
         missing. Plain driver-side rows (r11): hamming_knn_join packs
         them locally, so round-tripping through createDataFrame +
         collect was one pointless Spark job per serving call."""
-        if column not in self._hamming_index:
+        if (column, "hamming") not in self._memo:
             self.build_hamming_index(column)
-        center = self._hamming_centers[column]
+        center = self._memo[(column, "hamming_center")]
         return [
             (i, [float(x) - c for x, c in zip(v, center)])
             for i, v in enumerate(vecs)
@@ -2935,23 +2843,14 @@ class Collection:
                 center = [float(x) for x in np.load(io.BytesIO(raw))]
             if center is None:
                 action = "rebuild"  # signature data without its center
-        def _drop_cached_sig_view() -> None:
-            # any change to the on-disk signatures must invalidate the
-            # in-memory view, or an explicit refresh (the streaming
-            # refresh_index='hamming' path, or a second Collection over
-            # the same storage) would keep serving the pre-refresh
-            # snapshot out of the cache (r10 second-review catch -- the
-            # same hole _drop_cached_view closes for the pooled-centroid
-            # sidecar)
-            view = self._hamming_index.pop(column, None)
-            if view is not None:
-                try:
-                    view.unpersist()
-                except Exception:
-                    pass
-
+        # any change to the on-disk signatures below must drop the
+        # in-memory view, or an explicit refresh (the streaming
+        # refresh_index='hamming' path, or a second Collection over the
+        # same storage) would keep serving the pre-refresh snapshot out
+        # of the cache (r10 second-review catch -- the same hole
+        # refresh_maxsim_pool_index closes for the pooled-centroid view)
         if action == "current":
-            self._hamming_centers[column] = center
+            self._memo[(column, "hamming_center")] = center
             return "current"
         if action == "append":
             # new contains the fresh serve rows (key, vector); compute
@@ -2972,8 +2871,8 @@ class Collection:
                 .write.mode("append")
                 .parquet(path)
             )
-            self._hamming_centers[column] = center
-            _drop_cached_sig_view()
+            self._memo[(column, "hamming_center")] = center
+            self._memo_drop((column, "hamming"))
             return "appended"
         center = self._hamming_center(column)
         staged = path + ".build"
@@ -2984,8 +2883,8 @@ class Collection:
         np.save(buf, np.asarray(center, dtype=np.float64))
         self._fs_write_bytes(os.path.join(staged, "_center.npy"), buf.getvalue())
         self._fs_replace(staged, path)
-        self._hamming_centers[column] = center
-        _drop_cached_sig_view()
+        self._memo[(column, "hamming_center")] = center
+        self._memo_drop((column, "hamming"))
         return "built" if action == "missing" else "rebuilt"
 
     def build_hamming_index(self, column: str) -> None:
@@ -3020,7 +2919,7 @@ class Collection:
             idx = idx.join(self.docs().select(KEY_COL, *extra), KEY_COL)
         idx = idx.cache()
         idx.count()  # materialize: per-query cost is the bit-math scan only
-        self._hamming_index[column] = idx
+        self._memo[(column, "hamming")] = idx
 
     # ---- grouped-MaxSim pooled-centroid sidecar (r10, VERDICT r9 #1) ----
 
@@ -3045,7 +2944,7 @@ class Collection:
         only the exact tier needs). Null/empty vectors are excluded so
         the refresh count diff and the pooled ``n_vecs`` agree by
         construction (the pooling explode drops them anyway)."""
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memo.get((column, "serve"))
         base = cached if cached is not None else self._raw_serve_frame(column)
         base = base.where(F.col("content").isNotNull()).select(
             KEY_COL, "vector"
@@ -3090,18 +2989,10 @@ class Collection:
         live = self._maxsim_pool_live_frame(column, group_col)
         staged = path + ".build"
 
-        def _drop_cached_view() -> None:
-            # a successful swap must invalidate the in-memory view, or
-            # a caller who refreshes explicitly (the streaming
-            # refresh_index path) would keep serving the pre-refresh
-            # snapshot out of the cache
-            view = self._maxsim_pool.pop((column, group_col), None)
-            if view is not None:
-                try:
-                    view.unpersist()
-                except Exception:
-                    pass
-
+        # a successful swap must drop the in-memory view, or a caller
+        # who refreshes explicitly (the streaming refresh_index path)
+        # would keep serving the pre-refresh snapshot out of the cache
+        view_key = (column, "maxsim_pool", group_col)
         if not self._fs_nonempty(path):
             pooled = mean_pool_vectors(
                 live,
@@ -3113,7 +3004,7 @@ class Collection:
             )
             pooled.write.mode("overwrite").parquet(staged)
             self._fs_replace(staged, path)
-            _drop_cached_view()
+            self._memo_drop(view_key)
             return "built"
         idx = self.spark.read.parquet(path)
         cur = live.groupBy(group_col).agg(F.count("*").alias("_cur"))
@@ -3168,7 +3059,7 @@ class Collection:
                 staged
             )
             self._fs_replace(staged, path)
-            _drop_cached_view()
+            self._memo_drop(view_key)
         finally:
             diff.unpersist()
         return "refreshed"
@@ -3180,8 +3071,8 @@ class Collection:
         ``_invalidate_cache``. After the first use, a prefilter leg
         costs one in-memory scan + map-side top-k -- no pooling, no
         shuffle, no window."""
-        key = (column, group_col)
-        view = self._maxsim_pool.get(key)
+        key = (column, "maxsim_pool", group_col)
+        view = self._memo.get(key)
         if view is not None:
             return view
         self.refresh_maxsim_pool_index(column, group_col)
@@ -3196,7 +3087,7 @@ class Collection:
             .cache()
         )
         view.count()
-        self._maxsim_pool[key] = view
+        self._memo[key] = view
         return view
 
     # driver-side IN-list ceiling for the hamming rescore fetch: below
@@ -3231,19 +3122,19 @@ class Collection:
             for c in self.serve_filter_columns
             if c not in (KEY_COL, "content", "vector", "_vnorm", "_sig", column)
         ]
-        idx = self._hamming_index.get(column)
+        idx = self._memo.get((column, "hamming"))
         if idx is not None and any(c not in idx.columns for c in extra):
             # serve_filter_columns grew since the build (same rebuild
             # rule as the float serve view)
-            self._hamming_index.pop(column).unpersist()
+            self._memo_drop((column, "hamming"))
             idx = None
         if idx is None:
             self.build_hamming_index(column)
-            idx = self._hamming_index[column]
+            idx = self._memo[(column, "hamming")]
         # invariant: build_hamming_index (just ensured above) always
-        # runs refresh, which populates the center; the two caches are
-        # cleared in lockstep by _invalidate_cache
-        center = self._hamming_centers[column]
+        # runs refresh, which populates the center; both entries are
+        # the column's, so _invalidate_cache drops them together
+        center = self._memo[(column, "hamming_center")]
         scan = idx.where(F.expr(where)) if where is not None else idx
         # the stored signatures threshold at the per-dim mean, so the
         # query must subtract the SAME center before packing
@@ -3254,7 +3145,7 @@ class Collection:
             .orderBy(F.asc("_ham"), F.asc(KEY_COL))
             .limit(depth)
         )
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memo.get((column, "serve"))
         if cached is not None:
             # some OTHER strategy already paid for the float cache --
             # rescoring against it is one broadcast join, zero IO, and
@@ -3320,9 +3211,9 @@ class Collection:
         action, new = self._plan_index_refresh(column, path)
         meta = None
         if action in ("current", "append"):
-            meta = self._ivf_pq_index.get(column)
+            meta = self._memo.get((column, "ivf_pq"))
             if meta is None and self._load_ivf_pq_meta(column):
-                meta = self._ivf_pq_index[column]
+                meta = self._memo[(column, "ivf_pq")]
             if meta is None:
                 action = "rebuild"  # index data without its quantizers
         if action == "current":
@@ -3370,13 +3261,13 @@ class Collection:
             os.path.join(self.ivf_pq_path(column), "_codebook.npz"),
             cbuf.getvalue(),
         )
-        self._ivf_pq_index[column] = (centroids, cb)
+        self._memo[(column, "ivf_pq")] = (centroids, cb)
 
     def _drop_index_meta(self, column: str) -> None:
         """Full-overwrite writes (re-embed, re-import) drop the on-disk
         quantizer files: existing keys may now carry DIFFERENT vectors,
         which the refresh key-diff cannot see, so the quantizer-missing
-        path forces the rebuild (the in-memory dicts only protect THIS
+        path forces the rebuild (the in-memory memo only protects THIS
         process). Append-only writes skip this (drop_index_meta=False)
         and let :meth:`refresh_ivf_index`/:meth:`refresh_ivf_pq_index`
         top the index up at batch cost."""
@@ -3427,20 +3318,25 @@ class Collection:
         )
         if craw is None or braw is None:
             return False
-        self._ivf_pq_index[column] = (
+        self._memo[(column, "ivf_pq")] = (
             np.load(io.BytesIO(craw)),
             PQCodebook.load(io.BytesIO(braw)),
         )
         return True
 
+    def _ivf_pq_meta(self, column: str):
+        """(centroids, codebook) of the on-disk IVF-PQ index. The first
+        use validates freshness against the embeddings and tops the
+        index up incrementally (or rebuilds when it must)."""
+        key = (column, "ivf_pq")
+        if key not in self._memo:
+            self.refresh_ivf_pq_index(column)
+        return self._memo[key]
+
     def _search_ivf_pq(self, column: str, qvec, limit: int) -> DataFrame:
         from letsearch_spark.operators.pq import ivf_pq_topk
 
-        if column not in self._ivf_pq_index:
-            # validates freshness against the embeddings and tops the
-            # index up incrementally (or rebuilds when it must)
-            self.refresh_ivf_pq_index(column)
-        centroids, cb = self._ivf_pq_index[column]
+        centroids, cb = self._ivf_pq_meta(column)
         hits = ivf_pq_topk(
             self.spark,
             self.ivf_pq_path(column),
@@ -3457,12 +3353,12 @@ class Collection:
     def _search_ivf(self, column: str, qvec, limit: int) -> DataFrame:
         from letsearch_spark.operators.ann import ivf_topk
 
-        if column not in self._ivf_centroids:
+        if (column, "ivf") not in self._memo:
             self.refresh_ivf_index(column)
         hits = ivf_topk(
             self.spark,
             self.ivf_path(column),
-            self._ivf_centroids[column],
+            self._memo[(column, "ivf")],
             qvec,
             k=limit,
             nprobe=self.ivf_nprobe,
@@ -3476,7 +3372,7 @@ class Collection:
         """Serve view + sign-LSH bucket, repartitioned by bucket and
         cached: cached batches then hold few distinct buckets each, so a
         bucket filter skips whole batches via their min/max stats."""
-        view = self._emb_cache.get(f"__lsh_{column}")
+        view = self._memo.get((column, "lsh"))
         if view is None:
             from letsearch_spark.operators.topk import (
                 _hyperplanes,
@@ -3499,7 +3395,7 @@ class Collection:
                 .cache()
             )
             view.count()
-            self._emb_cache[f"__lsh_{column}"] = view
+            self._memo[(column, "lsh")] = view
         return view
 
     @staticmethod
@@ -3532,7 +3428,7 @@ class Collection:
     def _local_bundle(self, column: str):
         import numpy as np
 
-        bundle = self._local_idx.get(column)
+        bundle = self._memo.get((column, "local"))
         if bundle is None:
             view = self._serve_view(column)
             # strategy='local' collects the WHOLE serve view into driver
@@ -3557,7 +3453,7 @@ class Collection:
             mat = mat / norms
             contents = [r["content"] for r in rows]
             bundle = (keys, mat, contents)
-            self._local_idx[column] = bundle
+            self._memo[(column, "local")] = bundle
         return bundle
 
     def _local_lex_bundle(self, column: str):
@@ -3580,7 +3476,7 @@ class Collection:
         bundle (it is built FROM it); the one-time build is a Python
         pass over the corpus text -- driver-sized collections only,
         like everything strategy='local'."""
-        cached = self._local_idx.get(f"__lex_{column}")
+        cached = self._memo.get((column, "local_lex"))
         if cached is None:
             import math
             import re
@@ -3635,7 +3531,7 @@ class Collection:
                     postings[t] = (p_arr, w)
             keys_arr = np.asarray(keys, dtype=np.int64)
             cached = (postings, keys_arr, len(keys_arr))
-            self._local_idx[f"__lex_{column}"] = cached
+            self._memo[(column, "local_lex")] = cached
         return cached
 
     def _local_hybrid_rows(
@@ -3787,11 +3683,11 @@ class Collection:
             for c in self.serve_filter_columns
             if c not in (KEY_COL, "content", "vector", "_vnorm", column)
         ]
-        view = self._emb_cache.get(f"__serve_{column}")
+        view = self._memo.get((column, "serve"))
         if view is not None and any(c not in view.columns for c in extra):
             # serve_filter_columns grew since the build: rebuild so
             # search(where=...) predicates can see the new columns
-            self._emb_cache.pop(f"__serve_{column}").unpersist()
+            self._memo_drop((column, "serve"))
             view = None
         if view is None:
             docs = self.docs().select(
@@ -3811,5 +3707,5 @@ class Collection:
             emb = emb.withColumn("_vnorm", l2_norm(F.col("vector")))
             view = emb.join(docs, KEY_COL).cache()
             view.count()  # materialize now; searches then cost one job
-            self._emb_cache[f"__serve_{column}"] = view
+            self._memo[(column, "serve")] = view
         return view

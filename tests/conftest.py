@@ -20,14 +20,25 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # A bare whole-suite invocation (`pytest tests/ -x -q` and flag variants)
 # is split into N worker pytest processes, each owning complete test FILES
 # (module-scoped fixtures stay intact), each with its own SparkSession and
-# --basetemp. Everything else -- a single file, -k, -m, --collect-only, a
-# worker's own invocation, LS_SUITE_SERIAL=1 -- runs serially as before, so
-# the sharding can never change which tests exist or what they assert; it
-# only changes which OS process runs them. Worker outputs are printed in
-# full as each worker finishes (the tail of every worker, including its
-# summary line, stays visible), followed by one combined summary; the exit
-# code is the worst worker exit code, and with -x the first failing worker
-# terminates the rest.
+# --basetemp. Everything else -- a single file, -k, a -m other than the
+# default tier or "" (everything), --collect-only, --lf/--ff (they need the
+# cache the workers run without), a worker's own invocation,
+# LS_SUITE_SERIAL=1 -- runs serially as before, so the sharding can never
+# change which tests exist or what they assert; it only changes which OS
+# process runs them. Worker outputs are printed in full as each worker
+# finishes (the tail of every worker, including its summary line, stays
+# visible), followed by one combined summary; the exit code is the worst
+# worker exit code, and with -x the first failing worker terminates the
+# rest.
+#
+# Sizing: every worker runs its own driver JVM, so the default worker
+# count and each worker's SPARK_DRIVER_MEMORY come from the CPU count
+# (SPARK_GRAFT_CPUS, else the affinity mask) AND MemAvailable -- a fixed
+# 4 x 8 GB fleet gets a worker's JVM OOM-killed on a 15 GB host.
+# LS_SUITE_WORKERS and SPARK_DRIVER_MEMORY, when set, win. A worker whose
+# JVM dies stops at the test that was running and reports one
+# "JVM died" line (pytest_runtest_makereport below) instead of failing
+# every later Spark test with ConnectionRefusedError.
 # ---------------------------------------------------------------------------
 
 # Balance hints only (measured module seconds, r11): a stale weight makes a
@@ -59,6 +70,94 @@ def _suite_shards(files: list[str], n: int) -> list[list[str]]:
     return [members for _, members in buckets if members]
 
 
+# per-worker budget: the driver heap plus this much for the Python
+# workers, JVM off-heap memory and the pytest process itself
+_WORKER_OVERHEAD_GB = 2
+_MIN_HEAP_GB = 4
+_MAX_HEAP_GB = 8  # the session default (letsearch_spark/session.py)
+_MAX_WORKERS = 4
+# the stop reason pytest_runtest_makereport sets, as a finished worker's
+# log shows it ("!!! Interrupted: <reason> !!!")
+_JVM_DIED_RE = re.compile(r"JVM died \(likely OOM\)[^\n!]*\)")
+
+
+def _mem_available_gb() -> float | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) / (1024 * 1024)
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _suite_sizing(cpus: int, mem_gb: float | None) -> tuple[int, int]:
+    """Default (workers, driver heap GB per worker): one worker per two
+    CPUs up to four, no more than MemAvailable fits at the minimum heap
+    plus overhead, and the heap is each worker's share of MemAvailable
+    minus the overhead, capped at the session default. Without a
+    MemAvailable reading the CPU bound and the default heap apply."""
+    workers = max(1, min(_MAX_WORKERS, cpus // 2))
+    if mem_gb is not None:
+        fits = int(mem_gb // (_MIN_HEAP_GB + _WORKER_OVERHEAD_GB))
+        workers = max(1, min(workers, fits))
+    return workers, _worker_heap_gb(workers, mem_gb)
+
+
+def _worker_heap_gb(workers: int, mem_gb: float | None) -> int:
+    if mem_gb is None:
+        return _MAX_HEAP_GB
+    share = int(mem_gb / workers - _WORKER_OVERHEAD_GB)
+    return max(1, min(_MAX_HEAP_GB, share))
+
+
+def _worker_flags(invocation_args, suite_dirs) -> list[str]:
+    """The caller's flags minus the suite path the runner re-shards.
+    Empty arguments are option values, never paths: ``abspath("")`` is
+    the working directory, so comparing it would drop the "" of
+    ``-m ""`` and leave ``-m`` to swallow the next flag."""
+    return [
+        a for a in invocation_args
+        if not (a and os.path.abspath(a) in suite_dirs)
+    ]
+
+
+def _jvm_exit_code(wait_s: float = 1.0) -> int | None:
+    """Exit code of this process's Spark driver JVM once it has died;
+    None while it runs or when no JVM was started. Waits up to
+    ``wait_s``: the py4j socket fails before a killed JVM is reaped."""
+    if "pyspark" not in sys.modules:
+        return None
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is None:
+        return None
+    try:
+        return proc.wait(timeout=wait_s)
+    except subprocess.TimeoutExpired:
+        return None
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_runtest_makereport(item, call):
+    """Stop the run at the first test whose failure comes with a dead
+    driver JVM (the kernel's OOM killer is the usual cause): every later
+    Spark test would fail with ConnectionRefusedError and bury it."""
+    if call.excinfo is None or item.session.shouldstop:
+        return None
+    code = _jvm_exit_code()
+    if code is not None:
+        worker = os.environ.get("LS_SUITE_WORKER")
+        where = f"worker {worker}" if worker else "the test process"
+        item.session.shouldstop = (
+            f"JVM died (likely OOM) in {where}, last test {item.nodeid} "
+            f"(exit code {code})"
+        )
+    return None
+
+
 def pytest_cmdline_main(config):
     if os.environ.get("LS_SUITE_WORKER") or os.environ.get("LS_SUITE_SERIAL"):
         return None
@@ -68,13 +167,22 @@ def pytest_cmdline_main(config):
         or getattr(opt, "keyword", "")
         or getattr(opt, "markexpr", "") not in ("", "not deep")
         or getattr(opt, "numprocesses", None)  # a real xdist showed up
+        or getattr(opt, "lf", False)  # --lf/--ff read the cache workers
+        or getattr(opt, "failedfirst", False)  # run without
     ):
         return None
     tests_dir = os.path.dirname(os.path.abspath(__file__))
     args = [os.path.abspath(a) for a in config.args]
     if args not in ([tests_dir], [os.path.dirname(tests_dir)]):
         return None
-    workers = int(os.environ.get("LS_SUITE_WORKERS", "4"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    mem_gb = _mem_available_gb()
+    workers, heap_gb = _suite_sizing(cpus, mem_gb)
+    if os.environ.get("LS_SUITE_WORKERS"):
+        workers = int(os.environ["LS_SUITE_WORKERS"])
+        heap_gb = _worker_heap_gb(workers, mem_gb)
     if workers <= 1:
         return None
     files = sorted(glob.glob(os.path.join(tests_dir, "test_*.py")))
@@ -83,15 +191,15 @@ def pytest_cmdline_main(config):
     shards = _suite_shards(files, workers)
 
     # pass the original flags through (minus the suite path we re-shard)
-    flags = [
-        a for a in config.invocation_params.args
-        if os.path.abspath(a) not in (tests_dir, os.path.dirname(tests_dir))
-    ]
+    flags = _worker_flags(
+        config.invocation_params.args, (tests_dir, os.path.dirname(tests_dir))
+    )
     base_tmp = tempfile.mkdtemp(prefix="ls_suite_")
-    env = dict(os.environ, LS_SUITE_WORKER="1")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{heap_gb}g"
     t0 = time.time()
     print(
-        f"[suite-shard] {len(files)} files -> {len(shards)} workers "
+        f"[suite-shard] {len(files)} files -> {len(shards)} workers, "
+        f"driver memory {heap} each "
         f"(serial: LS_SUITE_SERIAL=1)", flush=True,
     )
     procs = []
@@ -109,12 +217,17 @@ def pytest_cmdline_main(config):
         log_f = open(log_path, "w")
         procs.append(
             subprocess.Popen(
-                cmd, stdout=log_f, stderr=subprocess.STDOUT, env=env,
+                cmd, stdout=log_f, stderr=subprocess.STDOUT,
+                env=dict(
+                    os.environ, LS_SUITE_WORKER=str(i),
+                    SPARK_DRIVER_MEMORY=heap,
+                ),
             )
         )
         log_f.close()
     totals = {"passed": 0, "failed": 0, "error": 0, "skipped": 0,
               "deselected": 0}
+    jvm_deaths: list[str] = []
 
     def _drain(i: int) -> None:
         # print a finished worker's full output IMMEDIATELY, so a
@@ -131,6 +244,7 @@ def pytest_cmdline_main(config):
             r"(\d+) (passed|failed|error|skipped|deselected)", out
         ):
             totals[kind] += int(n)
+        jvm_deaths.extend(dict.fromkeys(_JVM_DIED_RE.findall(out)))
 
     failed_fast = False
     drained: set[int] = set()
@@ -162,6 +276,8 @@ def pytest_cmdline_main(config):
                 _drain(i)
                 drained.add(i)
     rc = max((p.returncode or 0) for p in procs)
+    for line in jvm_deaths:
+        print(line, flush=True)
     print(
         f"===== suite-shard combined: {totals['passed']} passed, "
         f"{totals['failed']} failed, {totals['error']} errors, "

@@ -489,7 +489,7 @@ def test_search_strategy_ivf(spark, tmp_path, sf_dir):
     # writes invalidate: appending rebuilds on next ivf search
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._ivf_centroids
+    assert ("text", "ivf") not in c._memo
     c.embed_column("text", incremental=True)
     assert len(c.search("text", "spark join", limit=3, strategy="ivf").collect()) == 3
 
@@ -673,9 +673,9 @@ def test_search_hybrid_idf_modes_agree_and_invalidate(coll):
         (r["key"], r["score"])
         for r in coll.search("text", q, limit=10, strategy="hybrid").collect()
     ]
-    assert coll._lex_dfmap.get("text") is not None  # literal mode served
+    assert coll._memo.get(("text", "lex_idf_map")) is not None  # literal mode served
     # force the huge-vocabulary fallback: df computed in-plan
-    coll._lex_dfmap["text"] = None
+    coll._memo[("text", "lex_idf_map")] = None
     inplan = [
         (r["key"], r["score"])
         for r in coll.search("text", q, limit=10, strategy="hybrid").collect()
@@ -683,10 +683,10 @@ def test_search_hybrid_idf_modes_agree_and_invalidate(coll):
     assert lit == inplan
     # a write must invalidate the map alongside the lexical view
     coll._invalidate_cache("text")
-    assert "text" not in coll._lex_dfmap
+    assert ("text", "lex_idf_map") not in coll._memo
     # ...and a subsequent hybrid search rebuilds it
     coll.search("text", q, limit=5, strategy="hybrid").collect()
-    assert coll._lex_dfmap.get("text")
+    assert coll._memo.get(("text", "lex_idf_map"))
 
 
 def test_search_hybrid_excludes_unembedded_appends(spark, sf_dir, tmp_path):
@@ -877,14 +877,14 @@ def test_search_strategy_pq(spark, tmp_path, sf_dir):
         h["key"] for h in sorted(hits, key=lambda h: (-h["score"], h["key"]))
     ]
     # codebook + coded cache present; codes are pq_m bytes
-    cb, coded = c._pq_index["text"]
+    cb, coded = c._memo[("text", "pq")]
     assert cb.m == c.pq_m
     assert len(coded.select("pq_code").first()["pq_code"]) == c.pq_m
 
     # writes invalidate the pq index
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._pq_index
+    assert ("text", "pq") not in c._memo
     c.embed_column("text", incremental=True)
     assert len(c.search("text", "spark join", limit=3, strategy="pq").collect()) == 3
 
@@ -995,12 +995,12 @@ def test_search_strategy_hamming(spark, tmp_path, sf_dir):
     approx = c.search("text", row["text"], limit=5, strategy="hamming").collect()
     exact10 = {h["key"] for h in c.search("text", row["text"], limit=10).collect()}
     assert len({h["key"] for h in approx} & exact10) >= 3
-    assert "text" in c._hamming_index
+    assert ("text", "hamming") in c._memo
 
     # writes invalidate the signature cache
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._hamming_index
+    assert ("text", "hamming") not in c._memo
     c.embed_column("text", incremental=True)
     assert (
         len(c.search("text", "spark join", limit=3, strategy="hamming").collect())
@@ -1044,7 +1044,7 @@ def test_search_strategy_ivf_pq(spark, tmp_path, sf_dir):
     # writes invalidate
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._ivf_pq_index
+    assert ("text", "ivf_pq") not in c._memo
     c.embed_column("text", incremental=True)
     assert len(c.search("text", "spark", limit=3, strategy="ivf_pq").collect()) == 3
 
@@ -1070,17 +1070,17 @@ def test_ivf_pq_meta_persists_across_processes(spark, tmp_path, sf_dir):
     saved = np.load(cpath)
 
     c2 = Collection.load(spark, str(tmp_path), "meta")
-    assert c2._ivf_pq_index == {}
+    assert ("text", "ivf_pq") not in c2._memo
     hits = c2.search("text", "warm", limit=3, strategy="ivf_pq").collect()
     assert len(hits) == 3
     # loaded, not retrained: identical centroids object contents
-    assert np.array_equal(c2._ivf_pq_index["text"][0], saved)
+    assert np.array_equal(c2._memo[("text", "ivf_pq")][0], saved)
 
     # append-only write: in-memory serve caches drop, but the on-disk
     # quantizers survive for the incremental refresh path
     one = c2.docs().limit(1).drop("_key")
     c2._append_df(one)
-    assert c2._ivf_pq_index == {}
+    assert ("text", "ivf_pq") not in c2._memo
     assert os.path.exists(cpath)
 
     # full re-embed may re-vector EXISTING keys -> models are dropped
@@ -1272,10 +1272,10 @@ def test_serve_view_stable_when_indexed_column_listed(coll):
     coll.serve_filter_columns = ["lang", "text"]
     try:
         coll.search("text", "alpha words", limit=3).collect()
-        v1 = coll._emb_cache.get("__serve_text")
+        v1 = coll._memo.get(("text", "serve"))
         assert v1 is not None
         coll.search("text", "beta rows", limit=3).collect()
-        assert coll._emb_cache.get("__serve_text") is v1
+        assert coll._memo.get(("text", "serve")) is v1
     finally:
         coll.serve_filter_columns = []  # module-scoped fixture: reset
 
@@ -1395,13 +1395,13 @@ def test_search_strategy_auto(spark, tmp_path, sf_dir):
     )
 
     # the size signal is cached (no recount) and invalidated on writes
-    assert coll._col_rows["text"] == 500
+    assert coll._memo[("text", "rows")] == 500
     coll.add_chunks(["a brand new chunk of text"], column="text")
-    assert "text" not in coll._col_rows
+    assert ("text", "rows") not in coll._memo
     coll.embed_column("text")
     coll.auto_exact_max_rows = 200_000
     assert coll.resolve_strategy("text") == "join"
-    assert coll._col_rows["text"] == 501
+    assert coll._memo[("text", "rows")] == 501
 
 
 def _index_data_files(path):
@@ -1974,7 +1974,7 @@ def test_maxsim_prefilter_auto_tier(spark, tmp_path, sf_dir):
 
     # force the boundary the other way: auto == explicit k
     c.maxsim_auto_prefilter_min_groups = 1
-    c._maxsim_group_counts.clear()
+    c._memo.pop((None, "groups", "lang"), None)
     k = c.maxsim_auto_prefilter_k
     assert c.resolve_maxsim_prefilter("text", "lang") == k
     assert rows(prefilter_k="auto") == rows(prefilter_k=k)
@@ -2090,3 +2090,94 @@ def test_maxsim_prefilter_hamming_signal(spark, tmp_path, sf_dir):
         c.search_multi(
             "text", queries, limit=5, prefilter_k=8, prefilter_signal="lsh"
         )
+
+
+# every per-column kind of serving state the memo can hold
+_COLUMN_MEMO_KINDS = {
+    "embeddings_ok", "rows", "serve", "raw_serve", "lsh", "lexical",
+    "lex_idf_map", "local", "local_lex", "ivf", "pq", "ivf_pq", "hamming",
+    "hamming_center", "maxsim_pool",
+}  # fmt: skip
+
+
+def _build_every_memo_artifact(c, q):
+    """Serve every strategy once so the column holds each kind of memo
+    entry: serve view, raw frame, LSH view, lexical view + df map,
+    hamming view + center, local bundles, the pq/ivf_pq/ivf quantizers
+    and the pooled-centroid view."""
+    c.search("text", q, limit=5).collect()
+    c.search("text", q, limit=5, strategy="hybrid").collect()
+    c.search("text", q, limit=5, strategy="hamming").collect()
+    c.search("text", q, limit=5, strategy="lsh").collect()
+    c.search_rows("text", q, limit=5, strategy="local_hybrid")
+    for strategy in ("pq", "ivf_pq", "ivf"):
+        c.search("text", q, limit=5, strategy=strategy).collect()
+    c.search_multi(
+        "text", [q], limit=3, group_col="lang", prefilter_k=2
+    ).collect()
+    c._raw_serve_frame("text")
+    c.resolve_strategy("text")
+    assert {k[1] for k in c._memo if k[0] == "text"} == _COLUMN_MEMO_KINDS
+
+
+@pytest.mark.parametrize("write", ["append", "embed", "delete", "compact"])
+def test_every_write_path_drops_the_columns_memo(spark, tmp_path, sf_dir, write):
+    """Each write path -- append import, incremental embed_column,
+    delete_where and compact -- forgets every memo entry of the column
+    and the collection-wide docs plan, and the next search on the SAME
+    instance sees the write: it ranks like a freshly loaded Collection
+    over the same root. Compact keeps the live rows, so there the memo
+    check is the whole pin."""
+    import os
+
+    root = str(tmp_path / "root")
+    c = Collection.create(spark, root, name="w", model_name="stub://16")
+    c.import_parquet(os.path.join(sf_dir, "documents.parquet"))
+    c.embed_column("text")
+    c.serve_filter_columns = ["lang"]
+    new_text = "zebra quokka xylophone marmalade harbour"
+    new_doc = str(tmp_path / "new.parquet")
+    spark.createDataFrame(
+        [(new_text, "en")], "text string, lang string"
+    ).write.parquet(new_doc)
+    victim = c.docs().orderBy("_key").select("_key", "text").first()
+
+    if write == "embed":
+        c.append_parquet(new_doc)  # docs now hold an un-embedded row
+    if write == "compact":
+        c.delete_where(f"_key = {victim['_key']}")  # backlog to apply
+    q = new_text if write in ("append", "embed") else victim["text"]
+    _build_every_memo_artifact(c, q)
+    docs_plan = c._memo[(None, "docs")]
+
+    if write == "append":
+        c.append_parquet(new_doc)
+        # embed out of band: only the append's own invalidation can
+        # make this instance see the new row
+        Collection.load(spark, root, "w").embed_column("text")
+    elif write == "embed":
+        c.embed_column("text", incremental=True)
+    elif write == "delete":
+        c.delete_where(f"_key = {victim['_key']}")
+    else:
+        c.compact()
+    assert not [k for k in c._memo if k[0] == "text"], write
+    # collection-wide entries go too (a write's own return value may
+    # re-read them, never reuse them)
+    assert c._memo.get((None, "docs")) is not docs_plan
+
+    hits = {
+        strategy: c.search("text", q, limit=5, strategy=strategy).collect()
+        for strategy in ("join", "hybrid", "hamming")
+    }
+    local = c.search_rows("text", q, limit=5, strategy="local")
+    if write in ("append", "embed"):
+        for rows in [*hits.values(), local]:
+            assert rows[0]["content"] == new_text
+    else:
+        for rows in [*hits.values(), local]:
+            assert victim["_key"] not in {r["key"] for r in rows}
+    fresh = Collection.load(spark, root, "w")
+    for strategy, rows in hits.items():
+        want = fresh.search("text", q, limit=5, strategy=strategy).collect()
+        assert [tuple(r) for r in rows] == [tuple(r) for r in want], strategy

@@ -433,9 +433,9 @@ def test_hamming_refresh_recenters_past_fraction(spark, tmp_path, sf_dir):
     c.embed_column("text")
     assert c.refresh_hamming_index("text") == "built"
     # the build must NOT have cached the float serve view
-    assert "__serve_text" not in c._emb_cache
+    assert ("text", "serve") not in c._memo
     c.search("text", "probe", limit=3, strategy="hamming").collect()
-    assert "__serve_text" not in c._emb_cache
+    assert ("text", "serve") not in c._memo
 
     # small append: frozen center, 'appended'
     c.add_chunks(["one new doc"], column="text")

@@ -2217,6 +2217,66 @@ def test_bm25_with_idf_sql_fast_path_matches_column_twin(spark, sf_dir):
         postings.unpersist()
 
 
+def test_bm25_with_idf_non_finite_inputs_match_column_twin(spark):
+    """Non-finite k1, b, avgdl or idf values skip the SQL-string fast
+    path (its bit-identity holds for finite CAST literals only) and
+    score exactly like the Column composition -- NaN where the twin
+    gives NaN, inf where it gives inf."""
+    import math
+
+    from letsearch_spark.operators.bm25 import bm25_scores_with_idf, build_postings
+
+    docs = spark.createDataFrame(
+        [(1, "spark join"), (2, "spark window agg"), (3, "join join join")],
+        "doc_id long, text string",
+    )
+    postings = build_postings(docs)
+    term_df = {"spark": 2, "join": 2}
+
+    def twin(n_docs, avgdl, k1, b):
+        idf_entries = []
+        for t, d in term_df.items():
+            idf_entries.append(F.lit(t))
+            idf_entries.append(
+                F.lit(math.log(1.0 + (float(n_docs) - d + 0.5) / (d + 0.5)))
+            )
+        idf = F.create_map(*idf_entries)[F.col("__term")]
+        tf_norm = (
+            F.col("__tf")
+            * (k1 + 1.0)
+            / (F.col("__tf") + k1 * (1.0 - b + b * F.col("__dl") / F.lit(avgdl)))
+        )
+        return (
+            postings.where(F.col("__term").isin(list(term_df)))
+            .withColumn("__s", idf * tf_norm)
+            .groupBy("__id")
+            .agg(F.sum("__s").alias("bm25"))
+            .select(F.col("__id").alias("doc_id"), "bm25")
+        )
+
+    def scores(df):
+        # NaN != NaN: compare a NaN-safe spelling of each score
+        return {
+            r["doc_id"]: "nan" if math.isnan(r["bm25"]) else r["bm25"]
+            for r in df.collect()
+        }
+
+    inf, nan = float("inf"), float("nan")
+    for n_docs, avgdl, k1, b in [
+        (3, inf, 1.2, 0.75),  # finite scores from an infinite avgdl
+        (3, 2.0, inf, 0.75),
+        (3, 2.0, 1.2, nan),
+        (inf, 2.0, 1.2, 0.75),  # infinite idf for every term
+    ]:
+        got = scores(
+            bm25_scores_with_idf(
+                postings, term_df, n_docs, avgdl, id_col="doc_id", k1=k1, b=b
+            )
+        )
+        assert got == scores(twin(n_docs, avgdl, k1, b)), (n_docs, avgdl, k1, b)
+        assert len(got) == 3
+
+
 # ------------------------------------------------------------ dsir
 
 

@@ -694,7 +694,7 @@ def test_stream_refresh_hamming_and_maxsim_pool(spark, tmp_path):
     coll.search_multi(
         "text", ["spark joins"], limit=3, group_col="grp", prefilter_k=2
     ).collect()
-    assert ("text", "grp") in coll._maxsim_pool  # view cached
+    assert ("text", "maxsim_pool", "grp") in coll._memo  # view cached
     b2 = [(f"third batch doc {i} fresh group content", "c") for i in range(4)]
     process2(spark.createDataFrame(b2, schema), 2)
     groups = {
@@ -721,7 +721,7 @@ def test_stream_refresh_hamming_and_maxsim_pool(spark, tmp_path):
     # the re-read pool view sees the new group, and the hamming view
     # cache is gone until the next lazy build
     coll.search("text", "spark joins", limit=1, strategy="hamming").collect()
-    assert "text" in coll._hamming_index  # signature view cached
+    assert ("text", "hamming") in coll._memo  # signature view cached
     other = Collection.load(spark, str(tmp_path / "root"), "hprep")
     other._append_df(
         spark.createDataFrame(
@@ -729,14 +729,14 @@ def test_stream_refresh_hamming_and_maxsim_pool(spark, tmp_path):
         )
     )
     other.embed_column("text", incremental=True)
-    assert ("text", "grp") in coll._maxsim_pool
+    assert ("text", "maxsim_pool", "grp") in coll._memo
     assert coll.refresh_maxsim_pool_index("text", "grp") == "refreshed"
     view_groups = {
         r["grp"] for r in coll._maxsim_pool_view("text", "grp").collect()
     }
     assert "d" in view_groups
     assert coll.refresh_hamming_index("text") in ("appended", "rebuilt")
-    assert "text" not in coll._hamming_index  # stale view dropped
+    assert ("text", "hamming") not in coll._memo  # stale view dropped
 
     import pytest as _pytest
 
